@@ -317,8 +317,8 @@ object Dedup {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
     * false), so every durable checkpoint is RECORDED here and released
     * by `releaseCheckpoints` (explicit end-of-job call) or by the stale
-    * sweep `DedupStore` runs when a session stops — repeated cluster
-    * invocations no longer leak checkpoint storage.
+    * sweep each new recording runs over stopped contexts — repeated
+    * cluster invocations no longer leak checkpoint storage.
     */
   private[graft] def materializeOnce(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
@@ -341,11 +341,15 @@ object Dedup {
       (java.lang.ref.WeakReference[org.apache.spark.SparkContext],
         org.apache.hadoop.conf.Configuration)]()
 
-  private def recordCheckpointDir(sc: org.apache.spark.SparkContext): Unit =
+  private def recordCheckpointDir(sc: org.apache.spark.SparkContext): Unit = {
+    // a stopped context's durable checkpoint files are unreachable
+    // garbage (readable only through its RDD lineage) — sweep them
+    releaseStaleCheckpoints()
     sc.getCheckpointDir.foreach { d =>
       ckptRegistry.putIfAbsent(d,
         (new java.lang.ref.WeakReference(sc), sc.hadoopConfiguration))
     }
+  }
 
   /** Delete the recorded checkpoint directories of THIS context, plus
     * any whose context is gone.
@@ -355,10 +359,10 @@ object Dedup {
     * checkpoint the context ever wrote, not only dedup's: call it only
     * when NO checkpointed data of this context is needed again (end of
     * job), and prefer `DedupQueries.DedupStore.release(spark)`, which
-    * first drops the cached dedup relations whose lineage depends on
-    * these files — releasing under a live DedupStore cache would leave
-    * cached frames backed by deleted checkpoints (FileNotFoundException
-    * on any block recompute).
+    * first drops the session's memos — among them the cached dedup
+    * relations whose lineage depends on these files; releasing under a
+    * live DedupStore cache would leave cached frames backed by deleted
+    * checkpoints (FileNotFoundException on any block recompute).
     */
   def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession): Unit =
     releaseWhere { ref =>
@@ -367,9 +371,9 @@ object Dedup {
     }
 
   /** Delete recorded checkpoint dirs whose owning context is stopped or
-    * collected — the background sweep (`DedupStore.pruneStopped`).
+    * collected — the sweep `recordCheckpointDir` runs.
     */
-  private[graft] def releaseStaleCheckpoints(): Unit =
+  private def releaseStaleCheckpoints(): Unit =
     releaseWhere { ref =>
       val sc = ref.get
       sc == null || sc.isStopped

@@ -283,8 +283,6 @@ object Sketches {
     */
   def tokenCountQuantilesChecked(docs: DataFrame,
                                  accuracy: Int = 10000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val phis = Seq(0.5, 0.9, 0.99)
     val toks = docs.select(size(Text.tokenize(col("text"))).as("n_tokens"))
     val head = toks.agg(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.sources.Corpus
+import graft.sources.{Corpus, SessionStores}
 
 /** Dedup operator surface (⊕ LLM-pipeline): exact, MinHash-LSH near-dup
   * with Jaccard verification, SimHash fingerprints. Oracles re-express the
@@ -41,9 +41,8 @@ object DedupQueries {
     * query is the banded pair join over the fingerprint read.
     */
   private[graft] def dHashStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_imgdedup",
-      "dhash_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
+    val path = SessionStores.pathOf("graft_imgdedup", "dhash", dir)
+    SessionStores.servedPath(s, path) {
       val base = docs(s, dir).select(col("doc_id"), col("text"))
       val variants = base.select((col("doc_id") + VariantIdOffset).as("doc_id"),
         translate(col("text"), shiftFrom, shiftTo).as("text"))
@@ -66,9 +65,8 @@ object DedupQueries {
   private val ClipFrames = 4
   private val ClipFrameBytes = 96
   private[graft] def clipHashStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_clipdedup",
-      "clipdhash_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
+    val path = SessionStores.pathOf("graft_clipdedup", "clipdhash", dir)
+    SessionStores.servedPath(s, path) {
       val base = docs(s, dir).select(col("doc_id"), col("text"))
       val variants = base.select((col("doc_id") + VariantIdOffset).as("doc_id"),
         translate(col("text"), shiftFrom, shiftTo).as("text"))
@@ -516,70 +514,23 @@ object DedupQueries {
     * intermediate in the system — and it stays persisted
     * (MEMORY_AND_DISK, spillable) for the session so the LSH and
     * jaccard paths share it; size executor storage for roughly the
-    * tokenized corpus, or `invalidate(dir)` after the dedup queries to
-    * release it early.
+    * tokenized corpus, or `release` the session after the dedup queries.
+    * A corpus dir whose contents change mid-session keeps serving the
+    * relations computed at first touch, like a materialized view.
     */
   object DedupStore {
 
-    // CACHE CONTRACT: entries are keyed by (session, corpus dir) and live
-    // for the SESSION lifetime — a corpus dir whose contents change
-    // mid-session keeps serving the relations computed at first touch
-    // (exactly like a materialized view; call `invalidate` after
-    // rewriting a corpus in place). Entries of stopped sessions are
-    // pruned on every access so the map cannot pin dead SparkSessions or
-    // their persisted blocks for the JVM lifetime.
-    private val lock = new Object
-    private var hashCache = Map.empty[(SparkSession, String), DataFrame]
-    private var pairCache = Map.empty[(SparkSession, String), DataFrame]
-    private var clusterCache = Map.empty[(SparkSession, String), DataFrame]
-    private var bloomCache = Map.empty[(SparkSession, String), Array[Byte]]
-    private var candCache = Map.empty[(SparkSession, String), DataFrame]
-
-    private def pruneStopped(): Unit = {
-      hashCache = hashCache.filter(!_._1._1.sparkContext.isStopped)
-      pairCache = pairCache.filter(!_._1._1.sparkContext.isStopped)
-      clusterCache = clusterCache.filter(!_._1._1.sparkContext.isStopped)
-      bloomCache = bloomCache.filter(!_._1._1.sparkContext.isStopped)
-      candCache = candCache.filter(!_._1._1.sparkContext.isStopped)
-      // a stopped session's durable checkpoint files are unreachable
-      // garbage (readable only through its RDD lineage) — sweep them
-      Dedup.releaseStaleCheckpoints()
-    }
-
-    /** Drop the cached relations for one corpus dir (all sessions),
-      * unpersisting their blocks — for corpora rewritten in place.
+    /** End-of-job release for one session: drop this session's memos
+      * FIRST (the cached dedup relations' lineage references the
+      * reliable checkpoints), then delete the context's recorded
+      * checkpoint directories (`Dedup.releaseCheckpoints`). This is the
+      * safe order — deleting the files under a live cache would leave
+      * cached frames that FileNotFound on any block recompute. Only call
+      * when no checkpointed data of this context (dedup or otherwise) is
+      * needed again — see the scope warning on `Dedup.releaseCheckpoints`.
       */
-    def invalidate(dir: String): Unit = lock.synchronized {
-      hashCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      pairCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      clusterCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      candCache.filter(_._1._2 == dir).values.foreach(_.unpersist())
-      hashCache = hashCache.filter(_._1._2 != dir)
-      pairCache = pairCache.filter(_._1._2 != dir)
-      clusterCache = clusterCache.filter(_._1._2 != dir)
-      candCache = candCache.filter(_._1._2 != dir)
-      bloomCache = bloomCache.filter(_._1._2 != dir)
-    }
-
-    /** End-of-job release for one session: drop this session's cached
-      * dedup relations FIRST (their lineage references the reliable
-      * checkpoints), then delete the context's recorded checkpoint
-      * directories (`Dedup.releaseCheckpoints`). This is the safe order —
-      * deleting the files under a live cache would leave cached frames
-      * that FileNotFound on any block recompute. Only call when no
-      * checkpointed data of this context (dedup or otherwise) is needed
-      * again — see the scope warning on `Dedup.releaseCheckpoints`.
-      */
-    def release(s: SparkSession): Unit = lock.synchronized {
-      hashCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      pairCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      clusterCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      candCache.filter(_._1._1 eq s).values.foreach(_.unpersist())
-      hashCache = hashCache.filter(e => !(e._1._1 eq s))
-      pairCache = pairCache.filter(e => !(e._1._1 eq s))
-      clusterCache = clusterCache.filter(e => !(e._1._1 eq s))
-      candCache = candCache.filter(e => !(e._1._1 eq s))
-      bloomCache = bloomCache.filter(e => !(e._1._1 eq s))
+    def release(s: SparkSession): Unit = {
+      SessionStores.release(s)
       Dedup.releaseCheckpoints(s)
     }
 
@@ -587,30 +538,21 @@ object DedupQueries {
       * tokenize→shingle→md5 pass, persisted once per corpus and fed to
       * BOTH the LSH build (`pairs`) and `q_jaccard_pairs`.
       */
-    def hashes(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      hashCache.getOrElse((s, dir), {
+    def hashes(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup_hashes:" + dir) {
         val h = Dedup.shingleHashFrame(Corpus.documents(s, dir)).persist()
         h.count() // materialize before fan-out (cache does not dedupe within one action)
-        hashCache += (s, dir) -> h
         h
-      })
-    }
+      }
 
     /** The batch decontamination Bloom filter for `dir`'s eval slice,
       * built ONCE per (session, corpus) — the filter is a deterministic
       * function of the eval shingles, so per-execution rebuild jobs
       * (count + distributed aggregation) are pure steady-state waste.
       */
-    def benchBloom(s: SparkSession, dir: String): Array[Byte] = lock.synchronized {
-      pruneStopped()
-      bloomCache.getOrElse((s, dir), {
-        val b = Dedup.benchShingleBloom(
-          hashes(s, dir).select(col("doc_id"), col("sh")).filter(evalDocPred))
-        bloomCache += (s, dir) -> b
-        b
-      })
-    }
+    def benchBloom(s: SparkSession, dir: String): Array[Byte] =
+      SessionStores.memo(s, "dedup_bloom:" + dir)(Dedup.benchShingleBloom(
+        hashes(s, dir).select(col("doc_id"), col("sh")).filter(evalDocPred)))
 
     /** The rare-shingle candidate pair relation (maxDf=10,
       * minSharedRare=2), generated ONCE per (session, corpus) and shared
@@ -618,41 +560,28 @@ object DedupQueries {
       * ~half of either query's cost and is byte-identical between them.
       * Near-dup-pairs-sized (tiny); persisted.
       */
-    def rareCandidates(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      candCache.getOrElse((s, dir), {
+    def rareCandidates(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup_candidates:" + dir) {
         val c = Dedup.rareShingleCandidates(
           hashes(s, dir).filter(size(col("sh")) > 0),
           maxDf = 10, minSharedRare = 2).persist()
         c.count() // materialize before fan-out
-        candCache += (s, dir) -> c
         c
-      })
-    }
+      }
 
-    def pairs(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      pairCache.getOrElse((s, dir), {
+    def pairs(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup_pairs:" + dir) {
         val p = Dedup.nearDuplicatesFromHashes(hashes(s, dir)).persist()
         p.count() // materialize in one pass before fan-out to consumers
-        pairCache += (s, dir) -> p
         p
-      })
-    }
+      }
 
-    def clusters(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      pruneStopped()
-      clusterCache.getOrElse((s, dir), {
+    def clusters(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "dedup_clusters:" + dir) {
         val c = Dedup.clusters(pairs(s, dir)).persist()
         c.count()
-        clusterCache += (s, dir) -> c
         c
-      })
-    }
-
-    private var streamedStoreCache = Map.empty[(SparkSession, String), String]
-    private var streamedClusterCache =
-      Map.empty[(SparkSession, String), ((Long, Long), DataFrame)]
+      }
 
     /** Connected components over the streamed store's CURRENT pair
       * relation, memoized per (session, store) and keyed by the store's
@@ -663,44 +592,30 @@ object DedupQueries {
       * unchanged path is one scan of the pair store (near-dup-pair-
       * sized), not the O(log d) pointer-jumping rounds.
       */
-    def streamedClusters(s: SparkSession, storePath: String): DataFrame = lock.synchronized {
-      streamedClusterCache =
-        streamedClusterCache.filter(!_._1._1.sparkContext.isStopped)
-      val v = graft.streaming.StreamingDedup.pairsVersion(s, storePath)
-      streamedClusterCache.get((s, storePath)) match {
-        case Some((`v`, c)) => c
-        case stale =>
-          stale.foreach(_._2.unpersist())
-          val c = Dedup.clusters(
-            graft.streaming.StreamingDedup.pairs(s, storePath)).persist()
-          c.count()
-          streamedClusterCache += (s, storePath) -> (v, c)
-          c
+    def streamedClusters(s: SparkSession, storePath: String): DataFrame =
+      SessionStores.memo(s, "dedup_streamed_clusters:" + storePath,
+          version = graft.streaming.StreamingDedup.pairsVersion(s, storePath)) {
+        val c = Dedup.clusters(
+          graft.streaming.StreamingDedup.pairs(s, storePath)).persist()
+        c.count()
+        c
       }
-    }
 
     /** Path of a session-scoped `StreamingDedup` store holding `dir`'s
       * corpus INGESTED INCREMENTALLY — the corpus split into three
       * deterministic micro-batches (doc_id mod 3, ids 0/1/2) and fed
       * through `processBatch`, so the store exercises the real
       * accumulate path (new×old candidates against the growing
-      * signature store) rather than one batch-sized pass. Built once
-      * per (session, dir); files live under the `SessionStores` process
-      * scope and are deleted by its end-of-process hook.
+      * signature store) rather than one batch-sized pass.
       */
-    def streamedStorePath(s: SparkSession, dir: String): String = lock.synchronized {
-      pruneStopped()
-      streamedStoreCache = streamedStoreCache.filter(!_._1._1.sparkContext.isStopped)
-      streamedStoreCache.getOrElse((s, dir), {
-        val path = graft.sources.SessionStores.scopedPath("graft_streamcur",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
+    def streamedStorePath(s: SparkSession, dir: String): String = {
+      val path = SessionStores.pathOf("graft_streamcur", "store", dir)
+      SessionStores.builtPath(path) {
         val d = Corpus.documents(s, dir).select("doc_id", "text")
         for (b <- 0 until 3)
           graft.streaming.StreamingDedup.processBatch(
             d.filter(col("doc_id") % 3 === b), b, path)
-        streamedStoreCache += (s, dir) -> path
-        path
-      })
+      }
     }
   }
 

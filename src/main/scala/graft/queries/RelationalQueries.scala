@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.sources.SessionStores
 
 /** Relational capability surface (SURVEY §2.2) over the TPC-H-ish fixtures.
   *
@@ -37,9 +38,7 @@ object RelationalQueries {
     * contract: one row × 24 columns). Before r13 the two queries ran
     * near-identical moment passes over the same table and were the
     * board's top two bench costs (5.6 s combined); now the scan runs
-    * once and both projections read the cached row. Same session-store
-    * discipline as `TermStatsStore`/`StreamedIndex`: keyed by
-    * (session, dir), dropped when the session stops.
+    * once and both projections read the cached row.
     *
     * Determinism: every sum goes through DECIMAL (exact and
     * order-independent under any partitioning) and is cast to DOUBLE
@@ -52,12 +51,8 @@ object RelationalQueries {
       ("l_extendedprice", "l_discount"),
       ("l_discount", "l_tax"))
 
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "lineitem_moments:" + dir) {
         val aggs = cols.flatMap { c =>
           Seq(
             count(col(c)).as(s"nn_$c"),
@@ -72,12 +67,9 @@ object RelationalQueries {
         } ++ pairs.zipWithIndex.map { case ((x, y), i) =>
           sum((col(x) * col(y)).cast(DecimalType(18, 4))).cast("double").as(s"sxy_$i")
         } :+ count(lit(1)).as("n")
-        val m = tbl(s, dir, "lineitem").agg(aggs.head, aggs.tail: _*)
+        tbl(s, dir, "lineitem").agg(aggs.head, aggs.tail: _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, dir) -> m
-        m
-      })
-    }
+      }
   }
 
   /** Session-scoped persisted customer-grain RETURNS relation serving
@@ -87,17 +79,12 @@ object RelationalQueries {
     * consumers of this relation (the result rows and the 25-row nation
     * average) and Spark shares no common subplan across DataFrame
     * lineage — without it the lineitem ⋈ orders fact aggregate runs
-    * twice. Customer-grain ⇒ output-sized, never fact-sized; same
-    * (session, dir) memo discipline as `LineitemMoments`.
+    * twice. Customer-grain ⇒ output-sized, never fact-sized.
     */
   private[graft] object CustReturns {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        val m = tbl(s, dir, "lineitem").filter(col("l_returnflag") === "R")
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "cust_returns:" + dir) {
+        tbl(s, dir, "lineitem").filter(col("l_returnflag") === "R")
           .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_custkey"))
           .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
@@ -107,10 +94,7 @@ object RelationalQueries {
             col("c_nationkey") === col("n_nationkey"))
           .select(col("c_custkey"), col("c_name"), col("n_name"), col("ret_dec"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, dir) -> m
-        m
-      })
-    }
+      }
   }
 
   /** Session-scoped 25-row (r_name, n_name, rev, cnt) revenue LEAF
@@ -118,21 +102,16 @@ object RelationalQueries {
     * q_cube_revenue, q_grouping_sets): all three ran the identical
     * 5-table join + (region, nation) pre-aggregate before their Expand —
     * the entire cost of each query, paid three times per suite (~1.4 s
-    * each at sf0.1) for a byte-identical 25-row relation. Same
-    * (session, dir) memo discipline as `LineitemMoments`/`CustReturns`
-    * (r22, VERDICT #5); the grouping-set aggregates stay live per query
-    * and the DECIMAL leaf partials keep the exactness contract.
+    * each at sf0.1) for a byte-identical 25-row relation (r22,
+    * VERDICT #5); the grouping-set aggregates stay live per query and
+    * the DECIMAL leaf partials keep the exactness contract.
     */
   private[graft] object RevenueLeaf {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), DataFrame]
-
-    def of(s: SparkSession, dir: String): DataFrame = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
+    def of(s: SparkSession, dir: String): DataFrame =
+      SessionStores.memo(s, "revenue_leaf:" + dir) {
         Seq("lineitem", "orders", "customer", "nation", "region")
           .foreach(t => tbl(s, dir, t).createOrReplaceTempView(s"graft_$t"))
-        val m = s.sql(
+        s.sql(
           """SELECT r_name, n_name,
             |  SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS rev,
             |  COUNT(*) AS cnt
@@ -143,10 +122,7 @@ object RelationalQueries {
             |JOIN graft_region   ON n_regionkey = r_regionkey
             |GROUP BY r_name, n_name""".stripMargin)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cache += (s, dir) -> m
-        m
-      })
-    }
+      }
   }
 
   /** Session-scoped shared QUANTILE relation serving the whole exact-
@@ -176,9 +152,8 @@ object RelationalQueries {
     */
   private[graft] object PriceQuantiles {
     def of(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_quantiles",
-        "price_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+      val path = SessionStores.pathOf("graft_quantiles", "price", dir)
+      SessionStores.servedPath(s, path) {
         graft.operators.Percentiles.exactQuantiles(
             tbl(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
             Seq("p05" -> 0.05, "p25" -> 0.25, "p50" -> 0.5,
@@ -198,9 +173,8 @@ object RelationalQueries {
       * contract `of` documents).
       */
     def mad(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_quantiles",
-        "mad_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+      val path = SessionStores.pathOf("graft_quantiles", "mad", dir)
+      SessionStores.servedPath(s, path) {
         val med = of(s, dir).select(col("l_returnflag"), col("p50").as("median"))
         val dev = tbl(s, dir, "lineitem")
           .join(broadcast(med), "l_returnflag")
@@ -219,24 +193,16 @@ object RelationalQueries {
     * l_orderkey-mod-3 micro-batches through `processBatch` — each
     * batch contributes its lineitem slice's (src nation, dst nation,
     * count) partial weights, which SUM to the batch edge relation
-    * because counts are additive deltas). Built once per
-    * (session, dir); the EmbedStores pattern.
+    * because counts are additive deltas).
     */
   private[graft] object GraphStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
+    def streamedStore(s: SparkSession, dir: String): String = {
+      val path = SessionStores.pathOf("graft_graphstream", "store", dir)
+      SessionStores.builtPath(path) {
         for (b <- 0 until 3)
           graft.streaming.StreamingGraph.processBatch(
             nationEdgeContribs(s, dir, b), b.toLong, path): Unit
-        cache += (s, dir) -> path
-        path
-      })
+      }
     }
   }
 
@@ -329,7 +295,7 @@ object RelationalQueries {
     * none exist at any shipped SF, FactsStreamSpec pins the count so a
     * fixture regeneration that introduces one fails loudly). Dropped
     * at serve time. Build-once guarded by the facts subpath through
-    * `SessionStores.servedPath` (processBatch is idempotent per
+    * `SessionStores.builtPath` (processBatch is idempotent per
     * batchId, so a lost race is harmless); fact-table-grain batches
     * keep their task parallelism (filesPerBatch = 0 — the coalesce(1)
     * default exists for SMALL per-batch appends).
@@ -338,31 +304,21 @@ object RelationalQueries {
     private def withKey(d: DataFrame): DataFrame =
       d.withColumn("l_key", md5(to_json(struct(d.columns.map(col): _*))))
 
-    // skips servedPath's eager parquet read once built this process —
-    // the accessor below re-reads through StreamingFacts.facts anyway,
-    // so the served DataFrame here would be thrown away every call
-    private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
     def store(s: SparkSession, dir: String): String = {
-      val path = graft.sources.SessionStores.scopedPath("graft_listream",
-        "store_" + graft.sources.SessionStores.tagOf(dir))
-      if (!built.contains(path)) {
-        graft.sources.SessionStores.servedPath(s,
-          graft.streaming.StreamingFacts.factsPath(path)) {
-          val d = withKey(tbl(s, dir, "lineitem"))
-          for (b <- 0 until 3)
-            graft.streaming.StreamingFacts.processBatch(
-              d.filter(col("l_orderkey") % 3 === b), b.toLong, path,
-              "l_key", d.schema, filesPerBatch = 0): Unit
-          // settle the store ONCE at build: the three warehouse twins
-          // serve it on every timed read, and re-proving exact-once
-          // with a full fact-table exchange per query is repeated work
-          // that grows with the table — compaction collapses the
-          // replay-residual window physically, and the clean marker
-          // lets StreamingFacts.facts serve raw until the next append
-          graft.streaming.StreamingFacts.compactStore(s, path, "l_key", d.schema)
-        }: Unit
-        built.add(path): Unit
+      val path = SessionStores.pathOf("graft_listream", "store", dir)
+      SessionStores.builtPath(graft.streaming.StreamingFacts.factsPath(path)) {
+        val d = withKey(tbl(s, dir, "lineitem"))
+        for (b <- 0 until 3)
+          graft.streaming.StreamingFacts.processBatch(
+            d.filter(col("l_orderkey") % 3 === b), b.toLong, path,
+            "l_key", d.schema, filesPerBatch = 0): Unit
+        // settle the store ONCE at build: the three warehouse twins
+        // serve it on every timed read, and re-proving exact-once
+        // with a full fact-table exchange per query is repeated work
+        // that grows with the table — compaction collapses the
+        // replay-residual window physically, and the clean marker
+        // lets StreamingFacts.facts serve raw until the next append
+        graft.streaming.StreamingFacts.compactStore(s, path, "l_key", d.schema)
       }
       path
     }
@@ -825,9 +781,8 @@ object RelationalQueries {
     * batch pair store and DedupStore.
     */
   private[graft] def nationEdgesStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.SessionStores.scopedPath("graft_nationgraph",
-      "edges_" + graft.sources.SessionStores.tagOf(dir))
-    graft.sources.SessionStores.servedPath(s, path) {
+    val path = SessionStores.pathOf("graft_nationgraph", "edges", dir)
+    SessionStores.servedPath(s, path) {
       nationTradeEdges(s, dir)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
     }

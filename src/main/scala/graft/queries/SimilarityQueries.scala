@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.VectorStore
+import graft.sources.{SessionStores, VectorStore}
 
 /** Embedding similarity-search surface (⊕ LLM-pipeline) over
   * `embeddings.parquet`. Every query serves from the persisted
@@ -342,13 +342,10 @@ object SimilarityQueries {
     * store version — the margin-mining twin reads this instead of
     * recomputing the corpus-wide argmax inside every timed execution
     * (r17 review fix; the batch twin serves from `VectorStore.ivf`).
-    * The ≤16-row centroid lift memoizes per VERSIONED root (the
-    * `VectorStore.centroidCache` shape) so a served execution costs no
-    * extra driver job. Returns (assigned, centroids).
+    * The ≤16-row centroid lift is a session memo per VERSIONED root so
+    * a served execution costs no extra driver job. Returns (assigned,
+    * centroids).
     */
-  private val ivf0Centroids = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[graft.operators.Similarity.Centroid]]()
-
   private[graft] def streamedIvf0(s: SparkSession, dir: String)
       : (DataFrame, Seq[graft.operators.Similarity.Centroid]) = {
     import org.apache.spark.sql.functions.col
@@ -356,11 +353,10 @@ object SimilarityQueries {
     def p = graft.streaming.StreamingEmbed.vectors(s, store)
       .select(col("vec_id"), col("v"), col("norm"))
     val ver = graft.streaming.StreamingEmbed.storeVersionCached(s, store)
-    val root = graft.sources.SessionStores.scopedPath("graft_embstream_ivf0",
-      s"ivf0_v${ver._1}_${ver._2}_" + graft.sources.SessionStores.tagOf(store))
-    val cents = ivf0Centroids.computeIfAbsent(root,
-      _ => graft.operators.Similarity.collectCentroids(p, 16))
-    val assigned = graft.sources.SessionStores.servedPath(s, s"$root/assigned") {
+    val root = SessionStores.pathOf("graft_embstream_ivf0", s"ivf0_v${ver._1}_${ver._2}", store)
+    val cents = SessionStores.memo(s, "ivf0_cents:" + root)(
+      graft.operators.Similarity.collectCentroids(p, 16))
+    val assigned = SessionStores.servedPath(s, s"$root/assigned") {
       p.withColumn("cell",
           graft.operators.Similarity.bestCell(cents).cast("int"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -399,14 +395,11 @@ object SimilarityQueries {
     * a mutable store.
     */
   private[graft] def streamedIvfFor(s: SparkSession, store: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val p = graft.streaming.StreamingEmbed.vectors(s, store)
       .select("vec_id", "v", "norm")
     val ver = graft.streaming.StreamingEmbed.storeVersionCached(s, store)
-    val root = graft.sources.SessionStores.scopedPath("graft_embstream_ivf",
-      s"ivf_v${ver._1}_${ver._2}_" +
-        graft.sources.SessionStores.tagOf(store))
-    graft.sources.SessionStores.servedPath(s, s"$root/assigned") {
+    val root = SessionStores.pathOf("graft_embstream_ivf", s"ivf_v${ver._1}_${ver._2}", store)
+    SessionStores.servedPath(s, s"$root/assigned") {
       val cents = graft.operators.Similarity.lloydCentroids(p, nCells = 16, iters = 2)
       p.withColumn("cell", graft.operators.Similarity.bestCell(cents).cast("int"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -417,46 +410,35 @@ object SimilarityQueries {
   /** Session-scoped StreamingEmbed store holding `dir`'s embeddings
     * ingested incrementally (three deterministic vec_id-mod-3
     * micro-batches through `processBatch` — the accumulate path the
-    * streamed twins serve from). Built once per (session, dir).
+    * streamed twins serve from).
     */
   private[graft] object EmbedStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        import org.apache.spark.sql.functions.col
-        val path = graft.sources.SessionStores.scopedPath("graft_embstream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
+    def streamedStore(s: SparkSession, dir: String): String = {
+      import org.apache.spark.sql.functions.col
+      val path = SessionStores.pathOf("graft_embstream", "store", dir)
+      SessionStores.builtPath(path) {
         val emb = graft.sources.Tables.tbl(s, dir, "embeddings")
         for (b <- 0 until 3)
           graft.streaming.StreamingEmbed.processBatch(
             emb.filter(col("vec_id") % 3 === b), b.toLong, path): Unit
-        cache += (s, dir) -> path
-        path
-      })
+      }
     }
   }
 
   /** Session-scoped WHITENED-COORDINATE store: fit the 4-component
     * deflation model once, project the corpus once (shuffle-free
-    * mapPartitions — `Pca.whiten`), persist (vec_id, z[4]). Built once
-    * per (session, dir) in Bench's untimed store block; timed q_whiten
-    * reads only this.
+    * mapPartitions — `Pca.whiten`), persist (vec_id, z[4]). Built in
+    * Bench's untimed store block; timed q_whiten reads only this.
     */
   private[graft] object WhitenStore {
 
     def table(s: SparkSession, dir: String): DataFrame =
       tableFor(s, dir, "batch", s.read.parquet(s"$dir/embeddings.parquet"))
 
-    // path-keyed build-once via SessionStores.servedPath (the BpeStores
-    // shape — no per-session rebuild over the same scoped path)
     def tableFor(s: SparkSession, dir: String, tag: String,
                  emb: => DataFrame): DataFrame = {
-      val p = graft.sources.SessionStores.scopedPath("graft_whiten",
-        s"store_${tag}_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, p) {
+      val p = SessionStores.pathOf("graft_whiten", s"store_$tag", dir)
+      SessionStores.servedPath(s, p) {
         val e = emb
         val model = graft.operators.Pca.fit(e, dims = 64, k = 4)
         graft.operators.Pca.whiten(e, model, dims = 64)

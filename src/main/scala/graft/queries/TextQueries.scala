@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.operators.{BooleanQuery, InvertedIndex}
-import graft.sources.Corpus
+import graft.sources.{Corpus, SessionStores}
 
 /** Inverted-index + text-pipeline queries with their DuckDB oracles.
   *
@@ -128,53 +128,44 @@ object TextQueries {
       array_join(transform(slice(sort_array(collect_list(col("doc_id"))), 1, 100),
         d => d.cast("string")), ",").as("postings_csv"))
 
-  /** Session-scoped streamed index table per (session, dir) — built on
-    * first use, compacted once (restores (term, doc_id) uniqueness and
-    * per-bucket single files), then served read-only.
+  /** The streamed index catalog table — built on first use, compacted
+    * once (restores (term, doc_id) uniqueness and per-bucket single
+    * files), then served read-only.
     */
   private[graft] object StreamedIndex {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def table(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        val tag = graft.sources.SessionStores.tagOf(dir)
-        val path = graft.sources.SessionStores.scopedPath("graft_stridx", "store_" + tag)
-        val tbl = s"graft_stridx_$tag"
+    def table(s: SparkSession, dir: String): String = {
+      val tbl = s"graft_stridx_${SessionStores.tagOf(dir)}"
+      SessionStores.servedTable(s, tbl) {
+        val path = SessionStores.pathOf("graft_stridx", "store", dir)
+        // a restarted context finds the files (and their batch markers)
+        // but no catalog entry: ingest the derived store from scratch
+        val p = new org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val d = docs(s, dir)
         for (b <- 0 until 3)
           graft.streaming.StreamingIndex.appendBatch(
             InvertedIndex.postings(d.filter(col("doc_id") % 3 === b)),
             b.toLong, tbl, path, buckets = 32): Unit
         graft.streaming.StreamingIndex.compact(s, tbl, path, buckets = 32)
-        cache += (s, dir) -> tbl
-        tbl
-      })
+      }
+      tbl
     }
   }
 
   /** Session-scoped StreamingFuzzy store holding `dir`'s urls ingested
     * incrementally (three deterministic doc_id-mod-3 micro-batches —
-    * the EmbedStores pattern). Built once per (session, dir).
+    * the EmbedStores pattern).
     */
   private[graft] object FuzzyStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def streamedStore(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
-          "store_" + graft.sources.SessionStores.tagOf(dir))
+    def streamedStore(s: SparkSession, dir: String): String = {
+      val path = SessionStores.pathOf("graft_fuzzystream", "store", dir)
+      SessionStores.builtPath(path) {
         val d = docs(s, dir)
         for (b <- 0 until 3)
           graft.streaming.StreamingFuzzy.processBatch(
             d.filter(col("doc_id") % 3 === b).select("url"),
             b.toLong, path): Unit
-        cache += (s, dir) -> path
-        path
-      })
+      }
     }
 
     /** The word co-occurrence edge relation for TextRank, persisted
@@ -183,9 +174,8 @@ object TextQueries {
       * runs at store build, not per query.
       */
     def cooccurrenceEdges(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
-        "cooc_edges_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+      val path = SessionStores.pathOf("graft_fuzzystream", "cooc_edges", dir)
+      SessionStores.servedPath(s, path) {
         val bg = docs(s, dir).select(explode(
             Text.shinglesFromTokens(Text.tokensNoStop(col("text")), 2)).as("bg"))
           .select(split(col("bg"), " ").getItem(0).as("a"),
@@ -222,20 +212,16 @@ object TextQueries {
     /** String-keyed StreamingGraph store accumulating the TextRank
       * co-occurrence edge deltas (three mod-3 micro-batches through
       * `processBatch`) — the `GraphStores.streamedStore` pattern at
-      * term keys. Built once per (session, dir).
+      * term keys.
       */
-    def streamedCoocStore(s: SparkSession, dir: String): String = lock.synchronized {
-      coocCache = coocCache.filter(!_._1._1.sparkContext.isStopped)
-      coocCache.getOrElse((s, dir), {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "cooc_store_" + graft.sources.SessionStores.tagOf(dir))
+    def streamedCoocStore(s: SparkSession, dir: String): String = {
+      val path = SessionStores.pathOf("graft_graphstream", "cooc_store", dir)
+      SessionStores.builtPath(path) {
         for (b <- 0 until 3)
           graft.streaming.StreamingGraph.processBatch(
             coocContribs(s, dir, b), b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
-        coocCache += (s, dir) -> path
-        path
-      })
+      }
     }
 
     /** String-keyed StreamingGraph store accumulating the DOC-graph
@@ -244,11 +230,9 @@ object TextQueries {
       * weights are additive), exploded both directions. Feeds the
       * streamed twin of the SHUFFLE-path q_pagerank_docs.
       */
-    def streamedDocGraphStore(s: SparkSession, dir: String): String = lock.synchronized {
-      docGraphCache = docGraphCache.filter(!_._1._1.sparkContext.isStopped)
-      docGraphCache.getOrElse((s, dir), {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "docgraph_store_" + graft.sources.SessionStores.tagOf(dir))
+    def streamedDocGraphStore(s: SparkSession, dir: String): String = {
+      val path = SessionStores.pathOf("graft_graphstream", "docgraph_store", dir)
+      SessionStores.builtPath(path) {
         val pairs = batchPairs(s, dir)
         for (b <- 0 until 3) {
           val slice = pairs.filter(pmod(xxhash64(col("url_a")), lit(3)) === b)
@@ -260,12 +244,8 @@ object TextQueries {
             contribs, b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        docGraphCache += (s, dir) -> path
-        path
-      })
+      }
     }
-    private var coocCache = Map.empty[(SparkSession, String), String]
-    private var docGraphCache = Map.empty[(SparkSession, String), String]
 
     /** The BATCH corpus-wide ED-1 pair relation, persisted once per
       * (process, corpus) — the `DedupStore.pairs` discipline applied
@@ -274,9 +254,8 @@ object TextQueries {
       * variant self-join runs once, not once per consuming query.
       */
     def batchPairs(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_fuzzystream",
-        "batch_pairs_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+      val path = SessionStores.pathOf("graft_fuzzystream", "batch_pairs", dir)
+      SessionStores.servedPath(s, path) {
         graft.operators.FuzzyJoin.ed1Pairs(docs(s, dir), "url")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
@@ -684,9 +663,8 @@ object TextQueries {
     */
   private[graft] object DocGraphStores {
     def nodes(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_docgraph",
-        "nodes_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+      val path = SessionStores.pathOf("graft_docgraph", "nodes", dir)
+      SessionStores.servedPath(s, path) {
         docs(s, dir).select(col("url").as("node")).distinct()
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
@@ -700,9 +678,8 @@ object TextQueries {
     */
   private[graft] object CommunityStores {
     def labels(s: SparkSession, dir: String): DataFrame = {
-      val path = graft.sources.SessionStores.scopedPath("graft_communities",
-        "labels_" + graft.sources.SessionStores.tagOf(dir))
-      graft.sources.SessionStores.servedPath(s, path) {
+      val path = SessionStores.pathOf("graft_communities", "labels", dir)
+      SessionStores.servedPath(s, path) {
         val pairs = FuzzyStores.batchPairs(s, dir)
         val edges = pairs.select(explode(array(
           struct(col("url_a").as("src"), col("url_b").as("dst")),
@@ -722,14 +699,9 @@ object TextQueries {
     * any doc partition.
     */
   private[graft] object TermDfStores {
-    private val lock = new Object
-    private var cache = Map.empty[(SparkSession, String), String]
-
-    def store(s: SparkSession, dir: String): String = lock.synchronized {
-      cache = cache.filter(!_._1._1.sparkContext.isStopped)
-      cache.getOrElse((s, dir), {
-        val path = graft.sources.SessionStores.scopedPath("graft_graphstream",
-          "termdf_store_" + graft.sources.SessionStores.tagOf(dir))
+    def store(s: SparkSession, dir: String): String = {
+      val path = SessionStores.pathOf("graft_graphstream", "termdf_store", dir)
+      SessionStores.builtPath(path) {
         for (b <- 0 until 3) {
           val contribs = docs(s, dir).filter(col("doc_id") % 3 === b)
             .select(col("source").as("src"),
@@ -738,9 +710,7 @@ object TextQueries {
           graft.streaming.StreamingGraph.processBatch(contribs, b.toLong, path,
             keyType = org.apache.spark.sql.types.StringType): Unit
         }
-        cache += (s, dir) -> path
-        path
-      })
+      }
     }
   }
 

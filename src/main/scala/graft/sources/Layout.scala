@@ -111,7 +111,7 @@ object Layout {
 object LayoutStore {
 
   def lineitemZ(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_zorder", "li_" + SessionStores.tagOf(dir))
+    val path = SessionStores.pathOf("graft_zorder", "li", dir)
     SessionStores.servedPath(spark, path) {
       Layout.writeZOrdered(Tables.tbl(spark, dir, "lineitem"), path,
         "l_orderkey", "l_partkey")

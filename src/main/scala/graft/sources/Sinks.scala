@@ -264,11 +264,10 @@ object IndexStore {
     */
   def postings(spark: SparkSession, dir: String): DataFrame = {
     val tbl = tableNameFor(dir)
-    val path = SessionStores.scopedPath("graft_index", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
+    SessionStores.servedTable(spark, tbl) {
       Sinks.writeIndex(
         graft.operators.InvertedIndex.postings(Corpus.documents(spark, dir)),
-        tbl, path)
+        tbl, SessionStores.scopedPath("graft_index", tbl))
     }
   }
 
@@ -279,11 +278,10 @@ object IndexStore {
   def positionalPostings(spark: SparkSession, dir: String): DataFrame = {
     val tbl = "graft_positional_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
       "_" + SessionStores.tagOf(dir)
-    val path = SessionStores.scopedPath("graft_index", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
+    SessionStores.servedTable(spark, tbl) {
       Sinks.writeIndex(
         graft.operators.InvertedIndex.positionalPostings(Corpus.documents(spark, dir)),
-        tbl, path)
+        tbl, SessionStores.scopedPath("graft_index", tbl))
     }
   }
 }
@@ -301,7 +299,7 @@ object ColocatedStore {
 
   /** The bucket count is part of the table name: a second call with a
     * different `buckets` in the same process must build its own store,
-    * not silently serve the first call's shape from the verified cache.
+    * not silently serve the first call's shape from the built-once memo.
     */
   private def tableNameFor(base: String, dir: String, buckets: Int): String =
     s"graft_${base}_bkt${buckets}_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
@@ -310,13 +308,12 @@ object ColocatedStore {
   private def served(spark: SparkSession, dir: String, base: String,
                      bucketCol: String, buckets: Int): DataFrame = {
     val tbl = tableNameFor(base, dir, buckets)
-    val path = SessionStores.scopedPath("graft_coloc", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
+    SessionStores.servedTable(spark, tbl) {
       // drop the pre-bucket-count-rename table name if a persistent
       // metastore still carries it: the staleness guard only ever
       // consults the NEW name, so without this the orphaned entry would
       // sit registered over a scope directory the cleanup hook has
-      // deleted. Inside the build block = at most once per process per
+      // deleted. Inside the build block = at most once per context per
       // target, under the per-target lock — NEVER in the per-query
       // serving path (a metastore DDL round-trip per timed execution).
       val legacy = s"graft_${base}_bkt_" + dir.replaceAll("[^a-zA-Z0-9]", "_") +
@@ -324,7 +321,7 @@ object ColocatedStore {
       spark.sql(s"DROP TABLE IF EXISTS `$legacy`")
       Tables.tbl(spark, dir, base).write
         .mode(SaveMode.Overwrite)
-        .option("path", path)
+        .option("path", SessionStores.scopedPath("graft_coloc", tbl))
         .bucketBy(buckets, bucketCol)
         .sortBy(bucketCol)
         .saveAsTable(tbl)

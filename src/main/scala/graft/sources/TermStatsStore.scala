@@ -48,20 +48,18 @@ object TermStatsStore {
     */
   def tf(spark: SparkSession, dir: String): DataFrame = {
     val tbl = tfTableName(dir)
-    val path = SessionStores.scopedPath("graft_termstats", tbl)
-    SessionStores.servedTable(spark, tbl, path) {
+    SessionStores.servedTable(spark, tbl) {
       Sinks.writeIndex(
         Corpus.documents(spark, dir)
           .select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")),
-        tbl, path)
+        tbl, SessionStores.scopedPath("graft_termstats", tbl))
     }
   }
 
   /** The vocab-sized per-term statistics (term, df, c, stop). */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_termstats",
-      "stats_" + SessionStores.tagOf(dir))
+    val path = SessionStores.pathOf("graft_termstats", "stats", dir)
     SessionStores.servedPath(spark, path) {
       tf(spark, dir)
         .groupBy("term")
@@ -73,8 +71,7 @@ object TermStatsStore {
 
   /** Per-doc token lengths (doc_id, dl, dl_all); includes zero-token docs. */
   def docLengths(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_termstats",
-      "doclen_" + SessionStores.tagOf(dir))
+    val path = SessionStores.pathOf("graft_termstats", "doclen", dir)
     SessionStores.servedPath(spark, path) {
       Corpus.documents(spark, dir)
         .select(col("doc_id"),
@@ -90,8 +87,7 @@ object TermStatsStore {
     * computing it inline over the same per-doc lengths.
     */
   def scalars(spark: SparkSession, dir: String): DataFrame = {
-    val path = SessionStores.scopedPath("graft_termstats",
-      "scalars_" + SessionStores.tagOf(dir))
+    val path = SessionStores.pathOf("graft_termstats", "scalars", dir)
     SessionStores.servedPath(spark, path) {
       docLengths(spark, dir)
         .agg(

@@ -22,7 +22,7 @@ import graft.operators.Similarity
   *     a probe's literal `cell IN (...)` filter prunes whole directories
   *     at planning time and reads ~nProbe/nCells of the corpus; plus the
   *     ≤nCells-row centroid table `(cent_id, cv, cn)` the probe ranking
-  *     needs (driver-sized by contract, cached per process after one
+  *     needs (driver-sized by contract, a session memo after one
   *     metadata-sized read).
   *
   * Store identity includes every shape parameter (bits / nCells /
@@ -31,15 +31,15 @@ import graft.operators.Similarity
   */
 object VectorStore {
 
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Similarity.Centroid]]()
+  private val CentsKey = "ivf_cents:"
 
-  /** Test hook: drop the in-process centroid cache, putting the next
-    * read in the state of a FRESH process — the crash-window spec uses
-    * it so the repair path is pinned without help from stale cache
-    * contents (a true crash loses the cache with the process).
+  /** Test hook: drop the centroid memos, putting the next read in the
+    * state of a FRESH process — the crash-window spec uses it so the
+    * repair path is pinned without help from stale cache contents (a
+    * true crash loses the cache with the process).
     */
-  private[graft] def testClearCentroidCache(): Unit = centroidCache.clear()
+  private[graft] def testClearCentroidCache(): Unit =
+    SessionStores.forget(_.startsWith(CentsKey))
 
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.tbl(spark, dir, "embeddings")
@@ -48,8 +48,7 @@ object VectorStore {
     * (vec_id, v, norm, bucket) for `dir`, built on first use.
     */
   def vectors(spark: SparkSession, dir: String, bits: Int = 8): DataFrame = {
-    val path = SessionStores.scopedPath("graft_vec",
-      s"v_b${bits}_" + SessionStores.tagOf(dir))
+    val path = SessionStores.pathOf("graft_vec", s"v_b$bits", dir)
     SessionStores.servedPath(spark, path) {
       Similarity.prepared(emb(spark, dir))
         .withColumn("bucket", Similarity.signBucket(col("v"), bits))
@@ -65,8 +64,7 @@ object VectorStore {
     */
   def ivf(spark: SparkSession, dir: String, nCells: Int = 16,
           iters: Int = 0): (DataFrame, Seq[Similarity.Centroid]) = {
-    val root = SessionStores.scopedPath("graft_ivf",
-      s"ivf_c${nCells}_i${iters}_" + SessionStores.tagOf(dir))
+    val root = SessionStores.pathOf("graft_ivf", s"ivf_c${nCells}_i$iters", dir)
     // the centroid table is written BEFORE the assigned partitions: the
     // servedPath guard keys on `assigned/`, so its presence must imply a
     // complete store (a crash in between rebuilds both)
@@ -82,7 +80,7 @@ object VectorStore {
       p.withColumn("cell", Similarity.bestCell(cents).cast("int"))
         .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/assigned")
     }
-    val cents = centroidCache.computeIfAbsent(root, _ => {
+    val cents = SessionStores.memo(spark, CentsKey + root) {
       val spk = spark
       import spk.implicits._
       spark.read.parquet(s"$root/cents")
@@ -90,7 +88,7 @@ object VectorStore {
         .as[(Long, Seq[Double], Double)].collect().toSeq
         .map { case (id, cv, cn) => Similarity.Centroid(id, cv, cn) }
         .sortBy(_.id)
-    })
+    }
     (assigned, cents)
   }
 
@@ -149,17 +147,14 @@ object VectorStore {
     graft.operators.PQ.ivfPqTopK(assigned, cents, queryId, k, nProbe, poolSize)
   }
 
-  /** The OPQ eigen-allocation permutation for `dir`, memoized per
-    * process: ONE `Pca.fit` Gramian pass supplies the 6dp covariance
-    * diagonal (`Model.diag`), `PQ.eigenAllocation` turns it into the
+  /** The OPQ eigen-allocation permutation for `dir`, a session memo:
+    * ONE `Pca.fit` Gramian pass supplies the 6dp covariance diagonal
+    * (`Model.diag`), `PQ.eigenAllocation` turns it into the
     * variance-balancing rotation — model-sized state, like the centroid
-    * cache above.
+    * memo above.
     */
-  private val opqPermCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]()
-
   private[graft] def opqPerm(spark: SparkSession, dir: String): Seq[Int] =
-    opqPermCache.computeIfAbsent(dir, _ =>
+    SessionStores.memo(spark, "opq_perm:" + dir)(
       graft.operators.PQ.eigenAllocation(
         graft.operators.Pca.fit(emb(spark, dir), dims = 64, k = 1).diag.toSeq))
 
@@ -194,15 +189,14 @@ object VectorStore {
     * ≤ nCells rows (bounded by the cell-count contract, never corpus
     * size). On a stable corpus drift ≈ 0 and the store is untouched; a
     * shifted corpus fires the retrain and subsequent `ivf` reads serve
-    * the swapped store (the process centroid cache invalidates with
-    * it). Returns (drift, retrained).
+    * the swapped store (the centroid memos invalidate with it). Returns
+    * (drift, retrained).
     */
   def maintainIvf(spark: SparkSession, dir: String, current: DataFrame,
                   nCells: Int = 16, iters: Int = 2,
                   threshold: Double = 0.05): (Double, Boolean) = {
     import org.apache.spark.sql.types.DecimalType
-    val root = SessionStores.scopedPath("graft_ivf",
-      s"ivf_c${nCells}_i${iters}_" + SessionStores.tagOf(dir))
+    val root = SessionStores.pathOf("graft_ivf", s"ivf_c${nCells}_i$iters", dir)
     // CRASH-RESIDUE GATE (before any drift measurement): a previous
     // maintenance pass that died between swapInto(cents) and
     // swapInto(assigned) leaves FRESH centroids live over the OLD
@@ -230,7 +224,7 @@ object VectorStore {
         // the halves may disagree — drop the residue (the rebuild below
         // rewrites both side dirs from scratch) and the stale cache
         residue.foreach(s => fs.delete(new Path(s"$root/$s"), true))
-        centroidCache.remove(root)
+        SessionStores.forget(_ == CentsKey + root)
       }
       residue.nonEmpty
     }
@@ -288,7 +282,7 @@ object VectorStore {
         .parquet(s"$root/assigned__compacting")
       graft.streaming.StoreMaintenance.swapInto(spark, s"$root/cents")
       graft.streaming.StoreMaintenance.swapInto(spark, s"$root/assigned")
-      centroidCache.remove(root)
+      SessionStores.forget(_ == CentsKey + root)
       (drift, true)
     }
   }

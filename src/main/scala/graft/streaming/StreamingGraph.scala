@@ -248,8 +248,8 @@ object StreamingGraph {
               keyType: DataType = LongType)
              (compute: DataFrame => DataFrame): DataFrame = {
     val ver = storeVersion(spark, storePath, keyType)
-    val root = graft.sources.SessionStores.scopedPath("graft_graphstream",
-      s"${name}_v${ver._1}_${ver._2}_" + graft.sources.SessionStores.tagOf(storePath))
+    val root = graft.sources.SessionStores.pathOf("graft_graphstream",
+      s"${name}_v${ver._1}_${ver._2}", storePath)
     graft.sources.SessionStores.servedPath(spark, s"$root/out") {
       compute(edges(spark, storePath, keyType))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/out")

@@ -44,9 +44,6 @@ object IterPlans {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eDst = eSrc.repartition(col("dst")).sortWithinPartitions("dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nd = nodes.select("node")
-      .repartition(col("node")).sortWithinPartitions("node")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ar = graft.operators.Dedup.materializeOnce(
       eSrc.groupBy("dst")
         .agg(sum(lit(1.0).cast(DecimalType(27, 12))).cast("double").as("ar")))

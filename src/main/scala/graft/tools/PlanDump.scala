@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: print the plan of named queries. `SPARK_GRAFT_SF_DIR`
   * picks the corpus (default sf0.001); `SPARK_GRAFT_PLAN_MODE=formatted`

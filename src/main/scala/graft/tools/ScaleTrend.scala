@@ -246,8 +246,8 @@ object ScaleTrend {
         s.metadata.getOrElse("PartitionFilters", "").contains("cell"))
     val filesRead = ivfScan.map(s => s.metrics("numFiles").value).sum
     val filesTotal = {
-      val assigned = new java.io.File(graft.sources.SessionStores.scopedPath(
-        "graft_ivf", "ivf_c16_i0_" + graft.sources.SessionStores.tagOf(d10)) + "/assigned")
+      val assigned = new java.io.File(graft.sources.SessionStores.pathOf(
+        "graft_ivf", "ivf_c16_i0", d10) + "/assigned")
       def walk(f: java.io.File): Long =
         if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
         else if (f.getName.endsWith(".parquet")) 1L else 0L

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual registered queries in isolation, e.g.
   * `sbt "runMain graft.tools.TimeQuery q_lang_id q_tfidf"`.
